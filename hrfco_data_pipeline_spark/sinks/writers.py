@@ -15,9 +15,10 @@ Reference semantics → Spark-idiomatic form:
 - W8 DLQ (DeadLetterQueueProducer.java:49-86): append-only envelope
   dataset.
 
-All writers take already-classified DataFrames; the 3-way fan-out
-(W6) is ``persist() → three writes → unpersist()`` in
-streaming/pipeline.py, replacing the reference's 3-thread executor.
+All writers take already-classified DataFrames. The W6 fan-out lives in
+streaming/pipeline.py: like the reference's 3-thread storage executor,
+it submits the archive, fact, alerts and DLQ writes of one persisted
+micro-batch concurrently, one thread per sink, and awaits them all.
 """
 
 from __future__ import annotations

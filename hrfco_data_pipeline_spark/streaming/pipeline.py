@@ -6,18 +6,28 @@ whole job — write once, run both (SURVEY §7 design stance).
 
 Topology (mirrors §3.1 of the survey):
 
-    kafka/file JSON source
+    kafka/file JSON source (admission-capped per micro-batch)
       → from_json (T3, corrupt-record capture)
-      → process_observations (F1, F2, J1 stream-static broadcast join,
-        C1-C4)                                  [stateless → no watermark]
-      → foreachBatch:  persist → archive (W3) + fact (W4) + DLQ (W8)
-        → unpersist    [replaces the 3-thread storage executor, W6]
-      alerts (C5) → kafka/memory sink keyed by wlobscd (W7)
+      → foreachBatch:  coalesce(1) → persist
+        → process_observations (F1, F2, J1 stream-static broadcast join,
+          C1-C4)                                [stateless → no watermark]
+        → archive (W3) ∥ fact (W4) ∥ alerts (C5, W7) ∥ DLQ (W8)
+        → await all four → unpersist
 
-Delivery: checkpointed at-least-once into idempotent appends — the same
-guarantee the reference achieves with acks=all + DLQ (SURVEY §4 note).
-The stations dim is re-read every micro-batch by the stream-static
-join, which subsumes the reference's threshold cache refresh (J1).
+W6: the reference submits its storage writes to a fixed 3-thread pool,
+one future per sink (HRFCOStorageService.java:58-121). Here each sink
+write is a Spark job submitted from its own thread over the one cached
+batch, and every future is awaited before the batch's caches are
+released.
+
+Delivery: checkpointed at-least-once into plain appends. A batch that
+fails after some sinks have written is replayed on restart and those
+sinks then hold its rows twice (``created_at`` and the publish
+timestamps come from wall time, so the copies are not identical). The
+DLQ catches parse failures and, with breakers, storage failures (SURVEY
+§4 note). The stations dim is re-read every micro-batch by the
+stream-static join, which subsumes the reference's threshold cache
+refresh (J1).
 
 Kafka options mirror S4 (subscribe hrfco-waterlevel, startingOffsets
 earliest); tests use the file source for hermeticity.
@@ -25,6 +35,9 @@ earliest); tests use the file source for hermeticity.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor, wait
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -43,6 +56,19 @@ OBS_WIRE_SCHEMA = (
     "wlobscd string, ymdhm string, wl string, fw string, _corrupt string"
 )
 
+# Admission caps: each source admits a bounded micro-batch, so
+# ``run_stream`` can process every batch as a single task. A file is
+# one poll (one record per station), so 4 files are 4 polls.
+MAX_FILES_PER_TRIGGER = 4
+# A Kafka record is one observation. Without a cap an ``earliest``
+# backlog would arrive as one batch on one core. One task's share of a
+# batch grows by about 25 us a record over a fixed ~1.2 s per batch (a
+# 4-core VM, local[4]: 480 records 1.3 s, 24,000 1.6 s, 48,000 2.2 s,
+# 96,000 3.4 s), so at 20,000 records the row work stays near a third
+# of the fixed cost while a catch-up batch still holds 40x the four
+# 120-station polls that make a file-source batch.
+MAX_OFFSETS_PER_TRIGGER = 20_000
+
 
 def observations_file_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """JSON-lines file source (test stand-in for the Kafka source S4).
@@ -52,7 +78,7 @@ def observations_file_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """
     raw = (
         spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 4)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .load(source_dir)
     )
     rec = F.from_json(
@@ -83,6 +109,7 @@ def observations_kafka_stream(
         .option("kafka.bootstrap.servers", bootstrap)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
+        .option("maxOffsetsPerTrigger", MAX_OFFSETS_PER_TRIGGER)
         .load()
     )
     rec = F.from_json(
@@ -127,7 +154,10 @@ def run_stream(
     """
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
+        # one task per batch: the source's admission cap bounds it, and
+        # more partitions only multiply tasks and small output files
+        batch = batch.coalesce(1).persist()
+        classified = None
         try:
             good = batch.filter(F.col("_corrupt").isNull())
             dlq = batch.filter(F.col("_corrupt").isNotNull()).select(
@@ -138,44 +168,64 @@ def run_stream(
             classified = process_observations(
                 good.drop("value", "_corrupt"), stations
             ).persist()
+            storage_failures: list[tuple[str, str]] = []
+
+            def guarded(name: str, fn):
+                """Without a breaker for ``name`` a sink error propagates
+                and fails the query (fail-stop default); with one, it is
+                recorded for the DLQ and the stream carries on."""
+                breaker = (breakers or {}).get(name)
+                if breaker is None:
+                    return fn
+
+                def call() -> None:
+                    try:
+                        breaker.call(fn)
+                    except Exception as exc:  # noqa: BLE001 — degrade, DLQ, continue
+                        storage_failures.append((name, type(exc).__name__))
+
+                return call
 
             def write_alerts() -> None:
                 build_alerts(classified).withColumn(
                     "timestamp", F.unix_millis(F.current_timestamp())
                 ).write.mode("append").parquet(f"{out_dir}/alerts")
 
+            def write_dead_letters() -> None:
+                out = dlq
+                if storage_failures:
+                    env = spark.createDataFrame(
+                        [
+                            (None, f"batch {batch_id}", f"Storage failed: {n}: {e}")
+                            for n, e in storage_failures
+                        ],
+                        "original_key string, original_value string, error_reason string",
+                    )
+                    out = out.unionByName(env)
+                write_dlq(out, f"{out_dir}/dlq")
+
             sinks = (
                 ("archive", lambda: write_archive(classified, f"{out_dir}/archive", fmt="json")),
                 ("fact", lambda: write_fact(classified, f"{out_dir}/fact")),
                 ("alerts", write_alerts),
             )
-            # W6 fan-out: independent writes over one cached batch
-            storage_failures: list[tuple[str, str]] = []
-            for name, fn in sinks:
-                breaker = (breakers or {}).get(name)
-                if breaker is None and breakers is not None:
-                    fn()
-                    continue
-                if breakers is None:
-                    fn()  # fail-stop default: no breaker layer at all
-                    continue
-                try:
-                    breaker.call(fn)
-                except Exception as exc:  # noqa: BLE001 — degrade, DLQ, continue
-                    storage_failures.append((name, type(exc).__name__))
+            # W6 fan-out: one thread per sink, each job in the stream's
+            # job group (so stopping the query cancels it). Leaving the
+            # pool waits for every write, even after one has failed.
+            with ThreadPoolExecutor(max_workers=len(sinks) + 1) as pool:
 
-            if storage_failures:
-                env = spark.createDataFrame(
-                    [
-                        (None, f"batch {batch_id}", f"Storage failed: {n}: {e}")
-                        for n, e in storage_failures
-                    ],
-                    "original_key string, original_value string, error_reason string",
-                )
-                dlq = dlq.unionByName(env)
-            write_dlq(dlq, f"{out_dir}/dlq")
-            classified.unpersist()
+                def submit(fn):
+                    return pool.submit(inheritable_thread_target(spark)(fn))
+
+                futures = [submit(guarded(name, fn)) for name, fn in sinks]
+                if breakers:
+                    wait(futures)  # the DLQ carries the storage failures
+                futures.append(submit(write_dead_letters))
+            for f in futures:
+                f.result()  # fail-stop: the first sink error fails the batch
         finally:
+            if classified is not None:
+                classified.unpersist()
             batch.unpersist()
 
     src = stream

@@ -1,4 +1,5 @@
-"""E2E streaming pipeline test: file source → foreachBatch 3-way fan-out."""
+"""E2E streaming pipeline tests: file source → foreachBatch concurrent fan-out
+to archive, fact, alerts and DLQ."""
 
 from __future__ import annotations
 
@@ -123,3 +124,120 @@ def test_snapshot_sink_complete_mode(spark, tmp_path):
     assert not [
         d for d in os.listdir(tmp_path) if ".staging" in d or d.endswith(".old")
     ]
+
+
+def _land_polls(src, n_files: int, corrupt: bool = False) -> None:
+    """``n_files`` JSON-line files of observations over two dates and
+    both archive kinds (stations 0-4, 3 and 4 anomalous), optionally
+    with one truncated line for the DLQ."""
+    src.mkdir()
+    for i in range(n_files):
+        lines = [
+            f'{{"wlobscd":"{c}","ymdhm":"2025010{1 + c % 2}12{i:02d}",'
+            f'"wl":"{99.0 if c >= 3 else 1.0 + c}","fw":"1.0"}}'
+            for c in range(5)
+        ]
+        if corrupt:
+            lines.append('{"wlobscd":"1","ymdhm":')
+        (src / f"poll-{i}.json").write_text("\n".join(lines) + "\n")
+
+
+def _part_files(root) -> dict[str, int]:
+    """{directory relative to ``root``: number of part- files} for every
+    directory under ``root`` that holds data files."""
+    import os
+
+    return {
+        os.path.relpath(d, root): sum(f.startswith("part-") for f in files)
+        for d, _, files in os.walk(root)
+        if any(f.startswith("part-") for f in files)
+    }
+
+
+def test_stream_sink_jobs_run_in_the_stream_job_group(spark, tmp_path):
+    """Every sink write of a micro-batch runs in the stream's job group,
+    so stopping the query cancels in-flight writes."""
+    from hrfco_data_pipeline_spark.streaming.pipeline import MAX_FILES_PER_TRIGGER
+
+    src = tmp_path / "src"
+    _land_polls(src, MAX_FILES_PER_TRIGGER + 1)  # two micro-batches
+    q = run_stream(
+        spark,
+        observations_file_stream(spark, str(src)),
+        synthetic_stations(spark),
+        str(tmp_path / "out"),
+        str(tmp_path / "ck"),
+    )
+    assert q.awaitTermination(120)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) >= 4 * len(batches)  # archive, fact, alerts, DLQ
+
+
+def test_stream_writes_one_file_per_partition_directory(spark, tmp_path):
+    """A micro-batch runs as one task, so every sink partition directory
+    holds exactly one data file after a single-batch stream."""
+    src, out = tmp_path / "src", tmp_path / "out"
+    _land_polls(src, 2, corrupt=True)
+    q = run_stream(
+        spark,
+        observations_file_stream(spark, str(src)),
+        synthetic_stations(spark),
+        str(out),
+        str(tmp_path / "ck"),
+    )
+    assert q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 1
+
+    files = _part_files(out)
+    assert set(files) == {
+        "alerts",
+        "dlq",
+        "archive/kind=anomalies/obs_date=2025-01-01",
+        "archive/kind=anomalies/obs_date=2025-01-02",
+        "archive/kind=normal/obs_date=2025-01-01",
+        "archive/kind=normal/obs_date=2025-01-02",
+        "fact/obs_date=2025-01-01",
+        "fact/obs_date=2025-01-02",
+    }
+    assert set(files.values()) == {1}
+
+
+def test_stream_sink_error_fails_query_after_all_writes(spark, tmp_path, monkeypatch):
+    """Without breakers a sink error fails the query (fail-stop), but only
+    after the batch's other writes have finished: none outlives it."""
+    import time
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+
+    write_archive = pl.write_archive
+
+    def slow_archive(*a, **k):
+        time.sleep(1)  # still running when the fact write fails
+        write_archive(*a, **k)
+
+    def broken_fact(*a, **k):
+        raise IOError("fact store down")
+
+    monkeypatch.setattr(pl, "write_archive", slow_archive)
+    monkeypatch.setattr(pl, "write_fact", broken_fact)
+    src, out = tmp_path / "src", tmp_path / "out"
+    _land_polls(src, 1)
+    q = run_stream(
+        spark,
+        observations_file_stream(spark, str(src)),
+        synthetic_stations(spark),
+        str(out),
+        str(tmp_path / "ck"),
+    )
+    with pytest.raises(StreamingQueryException, match="fact store down"):
+        q.awaitTermination(120)
+    assert (out / "archive" / "_SUCCESS").exists()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
